@@ -292,10 +292,11 @@ object Graft {
   def bpeEncodeWith(c: Column, merges: Seq[(String, String)]): Column =
     functions.BpeEncode.encodeWith(c, merges)
 
-  /** Learn `k` BPE merges over `textCol` (Sennrich 2016): per round one
-    * pair-count aggregation pass + a single collected argmax row —
-    * driver state is k short-string pairs. Returns (a, b, count) in
-    * rank order; feed the pairs to
+  /** Learn `k` BPE merges over `textCol` (Sennrich 2016) from its word
+    * census: on the driver when the census has at most
+    * [[ops.Corpus.BpeDriverCensusBound]] words, else as one pair-count
+    * aggregation pass + a single collected argmax row per round.
+    * Returns (a, b, count) in rank order; feed the pairs to
     * [[graft.functions.BpeEncode.pairs]]-style encoding or compile a
     * table like [[graft.functions.BpeEncode.Merges]]. */
   def learnBpeMerges(docs: DataFrame, textCol: String,

@@ -48,8 +48,63 @@ object GraftConf {
 
 /** Parquet table loaders. One file per table under sfDir (TESTDATA.md). */
 object Tables {
-  def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** The table at `dir/name.parquet`, read with its footer schema.
+    * A bare `s.read.parquet` infers the schema with a one-task Spark job
+    * on every call, one job per table reference at query construction.
+    * [[footerSchema]] reads the same footer on the driver instead. */
+  def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    footerSchema(s, path) match {
+      case Some(schema) => s.read.schema(schema).parquet(path)
+      case None => s.read.parquet(path)
+    }
+  }
+
+  /** The schema Spark's parquet inference would give `path`, computed on
+    * the driver with no job. It runs the executor side of that inference
+    * here: `ParquetFileFormat.readSchemaFromFooter` under a
+    * `ParquetToSparkSchemaConverter` built from the session conf, so
+    * `nanosAsLong`, `binaryAsString` and `int96AsTimestamp` apply as they
+    * would there. The footers it reads are the ones inference picks:
+    *  - a file: that file;
+    *  - a directory: its first data file in path order
+    *    (`ParquetUtils.splitFiles` sorts the listing), or every data file,
+    *    merged in path order, when `spark.sql.parquet.mergeSchema` is on.
+    * Summary files (`_metadata`, `_common_metadata`) are not consulted;
+    * Spark has not written them by default since 2.0. None when the path
+    * is missing or holds no data file, so the caller's plain read raises
+    * Spark's own error. */
+  private[graft] def footerSchema(s: SparkSession,
+      path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = s.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    val files =
+      if (!fs.exists(p)) Seq.empty
+      else fs.getFileStatus(p) match {
+        case f if f.isFile => Seq(f)
+        case _ => fs.listStatus(p).toSeq.filter { f =>
+          val n = f.getPath.getName
+          f.isFile && n.endsWith(".parquet") &&
+            !n.startsWith("_") && !n.startsWith(".")
+        }.sortBy(_.getPath.toString)
+      }
+    val touched = if (s.sessionState.conf.isParquetSchemaMergingEnabled) files
+      else files.take(1)
+    val converter = new ParquetToSparkSchemaConverter(s.sessionState.conf)
+    val schemas = touched.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+      try ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(f.getPath, r.getFooter), converter)
+      finally r.close()
+    }
+    val caseSensitive = s.sessionState.conf.caseSensitiveAnalysis
+    schemas.reduceOption(
+      org.apache.spark.sql.graftbridge.Bridge.mergeSchemas(_, _, caseSensitive))
+  }
 
   /** Normalize events.ts to a session-timezone (UTC) microsecond
     * TimestampType regardless of how the fixture was written. The driver

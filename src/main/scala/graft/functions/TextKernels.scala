@@ -624,18 +624,32 @@ object TextKernels {
       copy(child = newChild)
   }
 
+  /** The longest long array `UnsafeArrayData.fromPrimitiveArray`
+    * accepts. It refuses an array whose size in 8-byte words,
+    * (header + 8·len + 7) / 8 with header = 8 + 8·⌈len/64⌉ bytes,
+    * exceeds Int.MaxValue / 8 = 268 435 455; so len + ⌈len/64⌉ + 1 ≤
+    * 268 435 455, and the largest such len is 264 305 677. */
+  val MaxPackedPairs: Long = 264305677L
+
+  /** C(n,2), the array [[packedPairs]] allocates for `n` ids, computed in
+    * Long: n·(n−1) overflows Int from n = 46 342. A caller that bypasses
+    * the posting-df cap must die with this named bound (n > 22 992),
+    * never a NegativeArraySizeException, Spark's unnamed array-size
+    * error, or a silently truncated pair set. */
+  def packedPairsSize(n: Int): Int = {
+    val pairs = n.toLong * (n - 1) / 2
+    require(pairs <= MaxPackedPairs,
+      s"packedPairs: posting list of $n ids gives $pairs pairs, over the " +
+        s"$MaxPackedPairs-element array bound — cap the group's df before " +
+        "emission")
+    pairs.toInt
+  }
+
   def packedPairs(ds: ArrayData): ArrayData = {
     val ids = ds.toLongArray()
     val n = ids.length
-    // loud failure, not corruption (ADVICE r18): C(n,2) in Int overflows
-    // past n = 65536 — a caller that bypasses the posting-df cap must
-    // die with a named bound, never a NegativeArraySizeException or a
-    // silently truncated pair set
-    require(n <= 65536,
-      s"packedPairs: posting list of $n ids exceeds the 65536 bound " +
-        "(C(n,2) overflows Int) — cap the group's df before emission")
+    val out = new Array[Long](packedPairsSize(n))
     java.util.Arrays.sort(ids)
-    val out = new Array[Long](n * (n - 1) / 2)
     var k = 0
     var i = 0
     while (i < n) {

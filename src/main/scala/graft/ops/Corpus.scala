@@ -1112,21 +1112,6 @@ object Corpus {
            FROM c CROSS JOIN t
            ORDER BY drift DESC, token LIMIT 50"""))
 
-  /** BPE merge-table LEARNING over a corpus — the training half of the
-    * tokenizer story ([[graft.functions.BpeEncode]] is the inference
-    * half): round r encodes every word with the r−1 merges learned so
-    * far, counts adjacent within-word token pairs globally, and adopts
-    * the most frequent pair (ties: lexicographic — fully deterministic).
-    * Classic Sennrich et al. 2016 BPE, run as k aggregation passes.
-    *
-    * Scale shape: per round, pairs explode map-side under codegen
-    * ([[graft.functions.BpePairs]] carries the current table as a
-    * reference object — the broadcast-variable analogue) and two-phase
-    * count on the pair; the driver keeps only the argmax row per round
-    * (ONE collected row — bounded driver state by the same argument as
-    * IVF centroids, k·bytes total). k corpus passes is the textbook
-    * algorithm's shape; production trainers shard-sample first, which
-    * composes here (any DataFrame works as input). */
   /** The corpus reduced to its word census — the lightweight proxy every
     * BPE pass actually needs (r19, guide §2.3 "aggregate before you
     * shuffle" / §8 "decide with small rows"): the encoder is strictly
@@ -1142,10 +1127,110 @@ object Corpus {
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("wn"))
 
-  /** [[learnBpeMerges]] over a pre-aggregated, CALLER-PERSISTED
-    * (word, count) census — split out so [[qBpeApplyLearned]] can reuse
-    * one census for both the k learning rounds and the apply pass. */
+  /** Census size (distinct words) up to which BPE learns its merges on
+    * the driver. Time sets it: [[learnBpeMergesLocal]] re-encodes every
+    * census word each round on one driver thread. On 16 384 random
+    * 4–32-char words at k = 8 (4-core x86 host, warm) it took 0.8 s
+    * against 1.6–2.0 s for [[learnBpeMergesRounds]] over the same
+    * persisted census, with identical merges; at 65 536 words it took
+    * 2.3–2.9 s, growing linearly. Driver memory at the bound: a
+    * collected (word, count) row costs about 150 B of object overhead
+    * (row, boxed count, the word as a String and as a UTF8String key)
+    * plus 3 B per char, so 16 384 words of 32 chars hold
+    * 16 384 × 246 B ≈ 4 MB, and the local relation
+    * [[learnBpeMergesFromWords]] builds from them about
+    * 16 384 × (48 B + 32 B) ≈ 1.3 MB more. A round's pair-count map
+    * holds one ~100 B entry per distinct adjacent token pair; that is at
+    * most (alphabet + k)² entries, ~0.2 MB for a 36-symbol alphabet at
+    * k = 8. */
+  val BpeDriverCensusBound: Int = 1 << 14
+
+  /** BPE merge-table LEARNING over a (word, count) census — the training
+    * half of the tokenizer story ([[graft.functions.BpeEncode]] is the
+    * inference half): round r encodes every word with the r−1 merges
+    * learned so far, counts adjacent within-word token pairs weighted by
+    * word frequency, and adopts the most frequent pair (ties: the
+    * byte-wise smallest pair — fully deterministic). Classic Sennrich et
+    * al. 2016 BPE.
+    *
+    * One job fetches at most `bound` + 1 census rows. A census that fits
+    * under `bound` is learned on the driver ([[learnBpeMergesLocal]]),
+    * with nothing persisted. A larger one runs the k rounds as
+    * distributed aggregations ([[learnBpeMergesRounds]]) over `words`
+    * persisted, which computes the census a second time to fill the
+    * cache. Both paths return the same merges and counts.
+    *
+    * Also returns the frame to read the census from afterwards: below
+    * the bound, a local relation of the collected rows (so a later pass
+    * over the census runs no corpus scan); above it, `words` itself,
+    * left persisted (MEMORY_AND_DISK) from the rounds — the caller reads
+    * it again or unpersists it. */
   private[ops] def learnBpeMergesFromWords(
+      words: org.apache.spark.sql.DataFrame,
+      k: Int,
+      bound: Int = BpeDriverCensusBound)
+      : (Seq[(String, String, Long)], org.apache.spark.sql.DataFrame) = {
+    val cols = words.select(col("w"), col("wn"))
+    val census = cols.limit(bound + 1).collect()
+    if (census.length <= bound) {
+      import scala.jdk.CollectionConverters._
+      val local = words.sparkSession.createDataFrame(census.toSeq.asJava,
+        cols.schema)
+      (learnBpeMergesLocal(census.toSeq.map(r =>
+        (org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)),
+          r.getLong(1))), k), local)
+    } else {
+      words.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (learnBpeMergesRounds(words, k), words)
+    }
+  }
+
+  /** [[learnBpeMergesRounds]] in plain Scala over a driver-side census:
+    * the same per-word kernel ([[graft.functions.BpeEncode.pairsWith]]),
+    * the same exact Long counts, and the same argmax. The tie order is
+    * `UTF8String.binaryCompare`, the order `orderBy(col("p"))` sorts
+    * strings by; Java `String` order differs above U+FFFF. */
+  private[ops] def learnBpeMergesLocal(
+      census: Seq[(org.apache.spark.unsafe.types.UTF8String, Long)],
+      k: Int): Seq[(String, String, Long)] = {
+    var flat = Array.empty[String]
+    var out = Vector.empty[(String, String, Long)]
+    var round = 0
+    var dry = false
+    while (round < k && !dry) {
+      val counts = scala.collection.mutable.HashMap
+        .empty[org.apache.spark.unsafe.types.UTF8String, Long]
+      census.foreach { case (w, wn) =>
+        val ps = graft.functions.BpeEncode.pairsWith(w, flat)
+        var i = 0
+        while (i < ps.numElements()) {
+          val p = ps.getUTF8String(i)
+          counts.update(p, counts.getOrElse(p, 0L) + wn)
+          i += 1
+        }
+      }
+      if (counts.isEmpty) dry = true
+      else {
+        val (p, n) = counts.reduce { (x, y) =>
+          if (x._2 > y._2 || (x._2 == y._2 && x._1.binaryCompare(y._1) < 0)) x
+          else y
+        }
+        val parts = p.toString.split(" ", 2)
+        flat = flat ++ parts
+        out :+= ((parts(0), parts(1), n))
+      }
+      round += 1
+    }
+    out
+  }
+
+  /** The k learning rounds as distributed aggregations over a persisted
+    * census, for vocabularies over [[BpeDriverCensusBound]]: per round,
+    * pairs explode map-side under codegen ([[graft.functions.BpePairs]]
+    * carries the current table as a reference object — the
+    * broadcast-variable analogue) and two-phase count on the pair; the
+    * driver keeps only the argmax row per round (ONE collected row). */
+  private[ops] def learnBpeMergesRounds(
       words: org.apache.spark.sql.DataFrame,
       k: Int): Seq[(String, String, Long)] = {
     var merges = Vector.empty[(String, String)]
@@ -1174,13 +1259,12 @@ object Corpus {
     out
   }
 
+  /** [[learnBpeMergesFromWords]] over the census of `docs`' `textCol`;
+    * any census it persisted is released before returning. */
   def learnBpeMerges(docs: org.apache.spark.sql.DataFrame, textCol: String,
       k: Int): Seq[(String, String, Long)] = {
-    // cache the vocabulary census, not the text: rounds 1..k then scan
-    // |V| rows instead of the corpus (see [[bpeWordCounts]])
     val words = bpeWordCounts(docs, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try learnBpeMergesFromWords(words, k)
+    try learnBpeMergesFromWords(words, k)._1
     finally words.unpersist(blocking = false)
   }
 
@@ -1231,22 +1315,24 @@ object Corpus {
     * a full plain-Scala replay, plus the fixed-point invariant that no
     * learned pair survives adjacent in the encoded output.
     *
-    * Scale shape (r19): ONE corpus word-count pass builds the
+    * Scale shape (r19): a corpus word-count pass builds the
     * vocabulary census ([[bpeWordCounts]]); the k learning rounds AND
     * the apply census all run over that |V|-row frame — token counts
     * decompose exactly as Σ count(word) × tokens(word) because the
-    * encoder never crosses a word boundary. Driver state stays k merge
-    * pairs. The census persist spans the rounds and the apply pass;
-    * evicted by [[graft.Graft.clearCaches]] like every persisted base. */
+    * encoder never crosses a word boundary. A census under
+    * [[BpeDriverCensusBound]] is learned on the driver and nothing is
+    * cached: the returned query reads the collected census as a local
+    * relation and scans no corpus. A larger census stays persisted from
+    * the rounds through the apply pass; evicted by
+    * [[graft.Graft.clearCaches]] like every persisted base. */
   val qBpeApplyLearned = Q(
     "q_bpe_apply_learned",
     (s, d) => {
-      val words = bpeWordCounts(T.documents(s, d), "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val learned = learnBpeMergesFromWords(words, BpeLearnRounds)
-        .map { case (a, b, _) => (a, b) }
+      val (merges, census) = learnBpeMergesFromWords(
+        bpeWordCounts(T.documents(s, d), "text"), BpeLearnRounds)
+      val learned = merges.map { case (a, b, _) => (a, b) }
       val products = learned.map { case (a, b) => a + b }.toSet
-      words
+      census
         .select(explode(graft.functions.BpeEncode.encodeWith(col("w"),
           learned)).as("token"), col("wn"))
         .groupBy("token").agg(sum(col("wn")).as("n"))

@@ -1057,9 +1057,12 @@ object Dedup {
       // (503k pairs): 62.8 s declared vs 34.4 s for the distance pass
       // alone, i.e. the edit distances were computed twice. Checkpoint
       // the distances (ids + two longs per pair, tiny) so the sampling
-      // and the sort both read materialized rows. Lazy (ADVICE r13):
-      // the sampling job itself materializes the marked blocks, so
-      // construction stays lazy with no second levenshtein pass.
+      // and the sort both read materialized rows. Not lazy at
+      // construction: under AQE, localCheckpoint(false) runs every
+      // shuffle map stage below it (the candidate pairs, the joins)
+      // while this DataFrame is being built; only the final stage, the
+      // levenshtein pass itself, waits for the sampling job, which
+      // materializes the marked blocks once.
       minhashPairs(s, d)
         .join(docs.select(col("doc_id").as("a"), col("text").as("ta")), "a")
         .join(docs.select(col("doc_id").as("b"), col("text").as("tb")), "b")

@@ -485,12 +485,13 @@ object TextOps {
     * pays its own honest cost — no CacheManager plan-dedup across bench
     * passes — and the sort stays a PARALLEL range sort (the report
     * frame scales with the near-dup pair count, so a single-partition
-    * sort is not a 100 TB shape). LAZY checkpoint (ADVICE r13): eager
-    * would execute the whole job at DataFrame-construction time — a
-    * semantics change for any non-bench caller composing further
-    * transforms. Lazy still kills the double execution: the sampling
-    * job is the first to iterate the marked RDD, which persists its
-    * blocks, and the sort pass reads them. */
+    * sort is not a 100 TB shape). `localCheckpoint(false)` is lazy only
+    * in its last stage: under AQE it takes the checkpointed plan's RDD,
+    * which runs every shuffle map stage below it while the DataFrame is
+    * being built (most of this query's jobs run at construction).
+    * Only the final stage, which computes and persists the marked
+    * blocks, waits for the sampling job, the first to iterate the
+    * marked RDD; the sort pass then reads those blocks. */
   private[ops] def winnowPairs(s: org.apache.spark.sql.SparkSession,
       d: String, maxDf: Int,
       viaGroups: Boolean = false,

@@ -226,4 +226,26 @@ class TextKernelsSpec extends SparkSpec {
       assert((ab >> 32) < (ab & 0xFFFFFFFFL), s"orientation broken for $ab")
     }
   }
+
+  test("packedPairsSize: C(n,2) in Long, bounded by the unsafe-array limit") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    // the same size test fromPrimitiveArray applies to an array of longs
+    def fits(len: Long): Boolean =
+      (UnsafeArrayData.calculateHeaderPortionInBytes(len) + 8L * len + 7) / 8 <=
+        Int.MaxValue / 8
+    assert(fits(TextKernels.MaxPackedPairs))
+    assert(!fits(TextKernels.MaxPackedPairs + 1))
+    assert(TextKernels.packedPairsSize(0) === 0)
+    assert(TextKernels.packedPairsSize(1) === 0)
+    assert(TextKernels.packedPairsSize(100) === 4950)
+    assert(TextKernels.packedPairsSize(22992) === 264304536)
+    // 46341 is the last n whose n·(n−1) fits in Int, 46342 the first that
+    // wraps, 65536 the old bound; the message carries the exact Long count
+    for ((n, pairs) <- Seq(22993 -> 264327528L, 46341 -> 1073720970L,
+        46342 -> 1073767311L, 65536 -> 2147450880L)) {
+      val e = intercept[IllegalArgumentException](TextKernels.packedPairsSize(n))
+      assert(e.getMessage.contains(
+        s"packedPairs: posting list of $n ids gives $pairs pairs"), e.getMessage)
+    }
+  }
 }

@@ -8,23 +8,28 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** SQL surface for the engine's custom Catalyst expressions.
+/** The engine's session extension: the SQL surface of its custom
+  * Catalyst expressions, plus one AQE runtime plan rule,
+  * [[OnePartitionSort]].
   *
   * Configure at session build (`spark.sql.extensions=graft.GraftExtensions`)
-  * for a catalog-level install, or call [[GraftExtensions.registerAll]] on
-  * a live session for the temp-function equivalent. Either way,
+  * to install both. [[GraftExtensions.registerAll]] on a live session is
+  * the temp-function equivalent for the functions only: a session built
+  * without the extension keeps Spark's own plans. Either way,
   * `spark.sql("SELECT graft_cosine(a, b) ...")` works — the preference
   * order the design follows is built-in function > custom Expression >
   * UDF, and this class is what makes the middle tier first-class.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.builders.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name),
         builder))
     }
+    ext.injectRuntimeOptimizerRule(OnePartitionSort(_))
+  }
 }
 
 object GraftExtensions {

@@ -730,8 +730,9 @@ object Curation {
     *
     * Scale shape: positions come from one posexplode with the previous
     * token read from the SAME row's array (`get(tk, pos-1)` — no
-    * self-join, no per-doc window); the model frames (unigram counts,
-    * bigram counts) are vocab-bounded aggregations; scoring is three
+    * self-join, no per-doc window); the unigram counts are a
+    * vocab-bounded aggregation, the bigram counts grow with the model
+    * slice (their broadcast ceiling is in SCALE.md); scoring is three
     * equi-joins keyed on those frames plus one broadcast scalar, then
     * the per-doc sum. */
   val qTextSurprisalBigram = Q(
@@ -753,14 +754,17 @@ object Curation {
       val bitlen: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         c => length(bin(c)).cast("long")
       // The three model joins broadcast EXPLICITLY (r19, guide §3.1):
-      // the model frames are vocab-bounded and deliberately small — the
-      // CCNet asymmetry, a strided slice of the train split — while the
-      // probe side is the corpus-sized exploded token frame. Left to
-      // size estimates the planner can flip these to sort-merge at
-      // scale, shuffling every token three times for a model that fits
-      // in memory by construction. (A model past the broadcast cap
-      // means the stride is mis-set, not that these joins should
-      // shuffle.)
+      // the model frames come from a strided slice of the train split
+      // (the CCNet asymmetry), while the probe side is the corpus-sized
+      // exploded token frame. Left to size estimates the planner can
+      // flip these to sort-merge at scale, shuffling every token three
+      // times. cnt1 (and t1) is vocab-bounded. cnt2 is NOT: it holds
+      // the distinct bigrams of the slice, which grow with the corpus
+      // (at most one per slice position, ~1/21 of corpus tokens), so
+      // past the broadcast cap this query fails where the planner
+      // would have degraded to a sort-merge join. SCALE.md
+      // (q_text_surprisal_bigram) states that corpus-size ceiling and
+      // its arithmetic; raising ModelDocStride raises it linearly.
       toks
         .join(broadcast(cnt1.toDF("prev", "c1prev")), Seq("prev"), "left")
         .join(broadcast(cnt2), Seq("prev", "tok"), "left")

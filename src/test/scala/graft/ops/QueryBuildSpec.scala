@@ -44,14 +44,6 @@ class QueryBuildSpec extends SparkSpec {
     }
   }
 
-  /** Sets SQL conf `key` to `value` around `body`, then restores it. */
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   test("footer schema equals Spark's inferred schema for every fixture table") {
     tables.foreach { name =>
       assert(Tables.t(spark, sf, name).schema ===
@@ -61,7 +53,7 @@ class QueryBuildSpec extends SparkSpec {
 
   test("events footer schema follows nanosAsLong, on and off") {
     Seq("true", "false").foreach { v =>
-      withConf("spark.sql.legacy.parquet.nanosAsLong", v) {
+      withConf("spark.sql.legacy.parquet.nanosAsLong" -> v) {
         assert(Tables.t(spark, sf, "events").schema ===
           spark.read.parquet(s"$sf/events.parquet").schema, s"nanosAsLong=$v")
       }
@@ -89,7 +81,7 @@ class QueryBuildSpec extends SparkSpec {
     val unmerged = Tables.t(spark, root.toString, "two").schema
     assert(unmerged === spark.read.parquet(path).schema)
     assert(unmerged.fieldNames.toSeq === Seq("id", "score"))
-    withConf("spark.sql.parquet.mergeSchema", "true") {
+    withConf("spark.sql.parquet.mergeSchema" -> "true") {
       val merged = Tables.t(spark, root.toString, "two").schema
       assert(merged === spark.read.parquet(path).schema)
       assert(merged.fieldNames.toSeq === Seq("id", "score", "text"))
